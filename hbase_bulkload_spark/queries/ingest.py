@@ -123,34 +123,21 @@ def q_scan_rcfile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_scan_avro_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Op 5b: the Avro OCF scan through the registered Spark Python
-    DataSource (`spark.read.format("avro_ocf")`) — the same codec as
-    q_scan_avro, but Catalyst-planned: header-inferred schema,
-    sync-anchored byte-range partitions, Arrow-batch reads. Same full
-    oracle, so the DataSource read path is value-checked end to end."""
-    from hbase_bulkload_spark.sources.format_datasources import register
-
+    """Op 5b: kept as a registry key, but it now has the same plan as
+    q_scan_avro — `avro_ocf.scan_splits` is the one Avro read path. Its
+    Python DataSource twin was removed as the slower of the pair (see
+    `sources.split_planning`)."""
     oracle_safe(spark)
-    register(spark)
-    path = records.avro_path(spark, sf_dir)
-    return spark.read.format("avro_ocf").load(path).select(*RECORD_COLS)
+    return records.scan_avro(spark, sf_dir)
 
 
 def q_scan_rcfile_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Op 4b: the RCFile scan through the registered Spark Python
-    DataSource (`spark.read.format("rcfile")`, names via option) —
-    same codec and oracle as q_scan_rcfile."""
-    from hbase_bulkload_spark.sources.format_datasources import register
-
+    """Op 4b: kept as a registry key, but it now has the same plan as
+    q_scan_rcfile — `rcfile.scan_splits` is the one RCFile read path.
+    Its Python DataSource twin was removed as the slower of the pair
+    (see `sources.split_planning`)."""
     oracle_safe(spark)
-    register(spark)
-    path = records.rcfile_path(spark, sf_dir)
-    return (
-        spark.read.format("rcfile")
-        .option("names", ",".join(RECORD_COLS))
-        .load(path)
-        .select(*RECORD_COLS)
-    )
+    return records.scan_rcfile(spark, sf_dir)
 
 
 def q_scan_hfile_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -464,11 +451,26 @@ def q_bulkload_hfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`HFileOutputFormat2`, BulkImporterFromText.java:108-111), placed
     into a 16-region table by the `doBulkLoad` analog
     (BulkImporterFromText.java:129-130), then the loaded table is
-    scanned BACK through the index-planned distributed HFile reader
-    (checksums verified) and summarized per region. The oracle computes
+    scanned BACK through `spark.read.format("hfile")` (index-planned,
+    checksums verified) and summarized per region. The oracle computes
     the same per-bucket summary relationally from the raw table, so a
     green row certifies the whole write→load→read round trip
     value-for-value."""
+    return _bulkload_hfile_summary(spark, sf_dir, "hfile_load")
+
+
+def q_bulkload_hfile_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Op 7b: kept as a registry key, but it now has the same plan as
+    q_bulkload_hfile (own scratch directory, same oracle). The HFile
+    sink is `write_region_hfiles` + `do_bulk_load`; the Python
+    DataSource sink this key used to exercise was removed as the slower
+    twin of `write_region_hfiles` (see `operators.hfile_load`)."""
+    return _bulkload_hfile_summary(spark, sf_dir, "hfile_ds_load")
+
+
+def _bulkload_hfile_summary(
+    spark: SparkSession, sf_dir: str, work_name: str
+) -> DataFrame:
     import tempfile
 
     from hbase_bulkload_spark.operators.hfile_load import (
@@ -491,7 +493,7 @@ def q_bulkload_hfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else tempfile.gettempdir()
     work = os.path.join(
         scratch_root,
-        f"hfile_load_{os.path.basename(os.path.normpath(sf_dir))}",
+        f"{work_name}_{os.path.basename(os.path.normpath(sf_dir))}",
     )
     boundaries = [format(i, "x").encode() for i in range(16)]
     # columns: the summary below needs only rowkey + value — decode-side
@@ -519,62 +521,6 @@ def _hfile_bucket_summary(scanned: DataFrame) -> DataFrame:
         F.max("rowkey").alias("max_rk"),
         F.sum("vl").alias("sum_value_len"),
     )
-
-
-def q_bulkload_hfile_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Op 7b WRITE side as a FULL-ORACLE query (round 9 — previously
-    pinned only by the test_hfile_datasource.py round trip): the same
-    ops-7+9 dataflow as q_bulkload_hfile, but the HFiles are written by
-    the registered Python DataSource SINK (`df.write.format("hfile")`,
-    two-phase commit via `_MANIFEST.json`), placed by the `doBulkLoad`
-    analog from the committed manifest (never a directory glob — files
-    from aborted attempts are invisible), and scanned back through the
-    `spark.read.format("hfile")` DataSource reader. The oracle computes
-    the identical per-bucket summary relationally from the raw table,
-    so a green row certifies the ENTIRE DataSource write → manifest
-    commit → bulk-load placement → DataSource read round trip
-    value-for-value (HFileOutputFormat2 + doBulkLoad,
-    BulkImporterFromText.java:108-111,129-130)."""
-    import json
-    import shutil
-    import tempfile
-
-    from hbase_bulkload_spark.operators import hfile_load as hl
-    from hbase_bulkload_spark.sources.hfile_datasource import register
-
-    oracle_safe(spark)
-    register(spark)
-    kv = bulkload_pipeline(
-        records.wide9(spark, sf_dir), KEY_COLS, RECORD_COLS, range_partitions=32
-    )
-    # same tmpfs-scratch rationale as q_bulkload_hfile: verification
-    # artifact, not a deliverable
-    scratch_root = (
-        "/dev/shm" if os.access("/dev/shm", os.W_OK) else tempfile.gettempdir()
-    )
-    work = os.path.join(
-        scratch_root,
-        f"hfile_ds_load_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    if os.path.exists(work):
-        shutil.rmtree(work)
-    staging = os.path.join(work, "staging")
-    table_dir = os.path.join(work, "table")
-    kv.write.format("hfile").mode("overwrite").save(staging)
-    with open(os.path.join(staging, "_MANIFEST.json")) as f:
-        manifest = json.load(f)
-    boundaries = [format(i, "x").encode() for i in range(16)]
-    hl.do_bulk_load(
-        [m["path"] for m in manifest], table_dir, boundaries, spark=spark
-    )
-    register(spark)  # idempotent; keeps the reader registered post-load
-    scanned = (
-        spark.read.format("hfile")
-        .option("columns", "value")
-        .load(table_dir)
-        .select("rowkey", "value")
-    )
-    return _hfile_bucket_summary(scanned)
 
 
 #: Deterministic multi-get keyset: rows with l_orderkey % MULTIGET_MOD

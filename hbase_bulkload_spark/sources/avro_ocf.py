@@ -38,6 +38,8 @@ import struct
 import zlib
 from collections.abc import Iterable, Iterator
 
+from hbase_bulkload_spark.sources.split_planning import list_files, scan_byte_splits
+
 MAGIC = b"Obj\x01"
 BLOCK_ROWS = 4096
 CODECS = (b"null", b"", b"deflate", b"snappy")
@@ -371,17 +373,16 @@ def iter_ocf_range(
             pos = p + block_size + sl
 
 
-DEFAULT_SPLIT_SIZE = 128 << 20  # HDFS-block-ish; override in tests
-
-
 def scan_splits(spark, path: str, split_size: int | None = None):
-    """The Avro scan operator (op 5): sync-marker byte-range splits →
-    one Arrow-batched ``mapInPandas`` decode stage.
+    """The Avro scan operator (op 5) and the one Avro read path:
+    sync-marker byte-range splits → one Arrow-batched ``mapInPandas``
+    decode stage (`sources.split_planning.scan_byte_splits`; this
+    module supplies the header reader and block decoder).
 
     The driver reads one tiny header per file (schema, sync, data
     offset) and emits ``ceil(size / split_size)`` splits per file, so
     scan parallelism tracks DATA volume, not file count — a single
-    misaligned 10 GB container becomes ~80 tasks at the default split.
+    misaligned 10 GB container becomes ~80 tasks at a 128 MB split.
     ``split_size=None`` (default) sizes splits adaptively à la Spark's
     own file planner (min(128 MB, max(1 MB, bytes/core))), so a small
     table still fans out across every core of the CPU-bound Python
@@ -390,61 +391,24 @@ def scan_splits(spark, path: str, split_size: int | None = None):
     `AvroKeyInputFormat<PWData>` assumes the same). Returns a DataFrame
     of the record fields as nullable strings/primitives per the schema.
     """
-    import glob as _glob
-
-    import pandas as pd
-
-    from hbase_bulkload_spark.sources.split_planning import adaptive_split_size
-
-    files = sorted(_glob.glob(os.path.join(path, "*.avro")))
-    if not files:
-        raise FileNotFoundError(f"no .avro files under {path}")
-
-    headers = [(p, header_info(p)) for p in files]
-    if split_size is None:
-        total = sum(h[3] - h[2] for _, h in headers)
-        split_size = adaptive_split_size(
-            total, spark.sparkContext.defaultParallelism
-        )
-    plan = []
-    schema = None
-    for p, (s, sync, data_start, fsize, codec) in headers:
-        if schema is None:
-            schema = s
-        b = data_start
-        while b < fsize:
-            e = min(b + split_size, fsize)
-            plan.append((p, b, e, data_start, sync.hex(), codec))
-            b = e
+    headers, schema = [], None
+    for p in list_files(path, ".avro"):
+        s, sync, data_start, fsize, codec = header_info(p)
+        schema = schema or s
+        headers.append((p, sync, data_start, fsize, codec))
     types = _field_types(schema)
     names = [f["name"] for f in schema["fields"]]
 
-    # one split per partition WITHOUT an Exchange node: numSlices at
-    # parallelize time, not a post-hoc repartition shuffle
-    sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan, len(plan)),
-        "path string, start long, end long, data_start long, sync string, codec string",
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                rows = list(
-                    iter_ocf_range(
-                        r.path, r.start, r.end, r.data_start,
-                        bytes.fromhex(r.sync), types, r.codec,
-                    )
-                )
-                yield pd.DataFrame(rows, columns=names, dtype=object)
+    def decode(p, start, end, data_start, sync, codec):
+        return iter_ocf_range(p, start, end, data_start, sync, types, codec)
 
     out_schema = ", ".join(f"{n} {spark_type(t)}" for n, t in zip(names, types))
-    return sdf.mapInPandas(decode, out_schema)
+    return scan_byte_splits(spark, headers, decode, names, out_schema, split_size)
 
 
 def spark_type(t) -> str:
     """Avro field type → Spark DDL type (nullable-union unwrapped;
-    int→long / float→double widenings are deliberate). The single
-    mapping shared by the operator scan and the `avro_ocf` DataSource."""
+    int→long / float→double widenings are deliberate)."""
     if isinstance(t, list):  # union: type of the non-null branch
         t = next(x for x in t if x != "null")
     return {

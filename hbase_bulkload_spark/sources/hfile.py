@@ -60,10 +60,12 @@ checksum/corruption tests; with no HBase in the container, a live
 run, and docstrings say so rather than claim it.
 
 Scale posture: one HFile per region bucket is written *by the
-executors* (`operators.hfile_load.write_region_hfiles`), and scans plan
-**block-range splits from the root index** (a few KB read per file on
-the driver) so read parallelism tracks bytes, not file count — the same
-split discipline as the RCFile/Avro scans.
+executors* (`operators.hfile_load.write_region_hfiles`, the one write
+path), and the one scan path, `spark.read.format("hfile")`
+(`sources.hfile_datasource`), plans **block-range splits from the root
+index** (a few KB read per file on the driver) so read parallelism
+tracks bytes, not file count — the same split discipline as the
+RCFile/Avro scans.
 
 Measured single-core codec throughput (round 5, 200k bulkload-shaped
 cells — 32-byte hex rowkeys, 8 cells/row, short qualifiers/values;
@@ -1051,10 +1053,10 @@ def decode_cells_arrow(
     casts to utf8 (validated, like the scalar path's ``.decode()``).
 
     Returns a dict of ``pa.Array`` keyed ``rowkey/family/qualifier/ts/
-    value`` (pruned columns absent). Both scan callers (``scan_hfiles``
-    mapInPandas and the ``format('hfile')`` DataSource) feed
-    Arrow/pandas, so measured end-to-end (decode THROUGH an Arrow
-    record batch, 32 warm workers) this is ~1.4x the scalar
+    value`` (pruned columns absent). The scan (the ``format('hfile')``
+    DataSource) feeds Arrow record batches, so measured end-to-end
+    (decode THROUGH an Arrow record batch, 32 warm workers) this is
+    ~1.4x the scalar
     decode-to-lists+pa.array path; feed it a whole split's
     concatenated block payloads, not single 64 KB blocks, or the
     per-call setup eats the win."""

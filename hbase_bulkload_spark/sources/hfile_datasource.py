@@ -1,9 +1,11 @@
 """`spark.read.format("hfile")` — the HFile v3 codec as a first-class
-Spark Python DataSource (pyspark.sql.datasource, Spark 4.x).
+Spark Python DataSource (pyspark.sql.datasource, Spark 4.x), and the one
+HFile read path: table read-back, range scans and the value-index seek
+(`operators.hfile_load`) all go through it. The source is read-only;
+HFiles are written by `operators.hfile_load.write_region_hfiles`.
 
-Where `operators.hfile_load.scan_hfiles` wires the distributed scan by
-hand (parallelize a plan + mapInPandas), this registers the same codec
-inside Catalyst's source framework, so the read IS a scan node:
+It registers the codec inside Catalyst's source framework, so the read
+IS a scan node:
 
 - `partitions()` returns one `InputPartition` per ~split_bytes of
   block ranges — the planner creates exactly that many tasks (the
@@ -16,7 +18,20 @@ inside Catalyst's source framework, so the read IS a scan node:
   performance contract here, correctness stays Spark's (the safe
   default for a range prune that inspects only block fences).
 - `read()` yields Arrow RecordBatches (one per decoded block chunk),
-  the vectorized path through the Python worker.
+  the vectorized path through the Python worker. A plan pruned to no
+  split reads nothing and yields the declared schema, empty.
+
+It replaced a hand-wired scan (parallelize a plan + mapInArrow) on
+measured cost: a full scan of a 10-region table of 89 900 cells took a
+median 2.53 s here against 3.57 s for the hand-wired scan (4-core VM,
+8 paired runs, faster in all 8).
+
+Call `load()` once per query. Spark 4.1 caches the planned splits on
+the relation a `load()` returns: a query with filters re-runs
+`pushFilters` and replaces the cache, but a query without filters
+reuses it. So after `df.filter(<rowkey range>).count()`, a plain
+`df.count()` counts only that range. Every caller in this package
+loads afresh per query.
 
 Registration is per-session and explicit:
 
@@ -25,19 +40,15 @@ Registration is per-session and explicit:
     df = spark.read.format("hfile").load(table_dir)
 
 The HFile layout itself lives in `sources.hfile`; the planning helper
-is shared with the operator path (`operators.hfile_load.
-plan_block_splits`), so both read paths prune identically.
+is `operators.hfile_load.plan_block_splits`.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
 
-import os
-
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceArrowWriter,
     DataSourceReader,
     EqualTo,
     Filter,
@@ -47,7 +58,6 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
     StringStartsWith,
-    WriterCommitMessage,
 )
 
 _PRUNABLE = ("family", "qualifier", "ts", "value")
@@ -65,15 +75,15 @@ def _opt_binary(options) -> bool:
     """`.option("binary", "true")` keeps raw cell bytes — required for
     tables written in the reference-fidelity raw-key/positional modes,
     whose keys and qualifiers are not UTF-8 (same knob as
-    `operators.hfile_load.scan_hfiles(binary=True)`)."""
+    `operators.hfile_load.multi_get(binary=True)`)."""
     return str(options.get("binary", "false")).lower() == "true"
 
 
 def _opt_columns(options) -> tuple[str, ...]:
     """`.option("columns", "value,ts")` — decode-side column pruning,
-    the HFile analog of a parquet ReadSchema (same knob as
-    `scan_hfiles(columns=...)`): a pruned column's per-cell slice +
-    decode cost is never paid. region/rowkey are always kept."""
+    the HFile analog of a parquet ReadSchema: a pruned column's
+    per-cell slice + decode cost is never paid. region/rowkey are
+    always kept."""
     if "columns" not in options:
         return _PRUNABLE
     want = {c.strip() for c in options["columns"].split(",")}
@@ -174,7 +184,11 @@ class HFileReader(DataSourceReader):
             )
         ]
 
-    def read(self, partition: HFileScanPartition):
+    def read(self, partition: HFileScanPartition | None):
+        if partition is None:
+            # partitions() planned nothing (every file pruned) and Spark
+            # calls read(None) once: the scan is empty
+            return
         import pyarrow as pa
 
         from hbase_bulkload_spark.sources import hfile as hf
@@ -234,100 +248,6 @@ class HFileReader(DataSourceReader):
                 )
 
 
-class HFileCommit(WriterCommitMessage):
-    def __init__(self, manifest: list[dict]):
-        self.manifest = manifest
-
-
-class HFileSinkWriter(DataSourceArrowWriter):
-    """`df.write.format("hfile").save(dir)` — the `HFileOutputFormat2`
-    half of the reference's sink (BulkImporterFromText.java:108-111):
-    each task streams its partition of the region-aligned KV contract
-    (rowkey, family, qualifier, value, bucket — sorted within
-    partitions by (bucket, rowkey, qualifier), i.e.
-    `operators.bulkload.region_align` output) into one HFile per
-    bucket; `commit()` writes a `_MANIFEST.json` + `_SUCCESS` on the
-    driver (the two-phase-commit contract: files from aborted attempts
-    are never listed). Placement into a region layout stays a separate
-    step (`operators.hfile_load.do_bulk_load`), exactly as the
-    reference separates job output from `doBulkLoad`."""
-
-    REQUIRED = ("rowkey", "family", "qualifier", "value", "bucket")
-
-    def __init__(self, options, schema):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("format('hfile') write requires .save(<dir>)")
-        missing = [c for c in self.REQUIRED if c not in schema.fieldNames()]
-        if missing:
-            raise ValueError(
-                f"hfile sink needs the KV contract columns; missing {missing}"
-            )
-        self.compression = options.get("compression", "snappy")
-        if self.compression in ("none", ""):
-            self.compression = None
-        self.ts = int(options.get("ts", 0))
-
-    def write(self, iterator) -> "HFileCommit":
-        # the DataSource API hands Arrow record batches — feed them to
-        # the arrow executor body directly (round 7; the former
-        # to_pandas() hop materialized every cell as a Python object)
-        from hbase_bulkload_spark.operators.hfile_load import (
-            task_file_label,
-            write_partition_cells_arrow,
-        )
-
-        os.makedirs(self.path, exist_ok=True)
-        manifest = write_partition_cells_arrow(
-            iterator,
-            self.path,
-            task_file_label(),  # attempt-unique: speculative-safe
-            self.compression,
-            self.ts,
-        )
-        return HFileCommit(manifest)
-
-    def commit(self, messages) -> None:
-        import glob as _glob
-        import json
-
-        manifest = [m for msg in messages for m in msg.manifest]
-        # sweep orphans: attempt-unique names mean a failed or losing
-        # speculative attempt leaves a file the committed manifest never
-        # references — delete it so directory globbers (not just
-        # manifest readers) see only committed files. BEST-EFFORT, not
-        # an invariant: attempts write under .tmp names and rename only
-        # on task completion (see write_partition_cells_arrow), so the
-        # remaining race is one rename instant — a zombie attempt that
-        # completes AFTER this glob can still leave one orphan, and the
-        # sweep assumes this job owns the directory (concurrent writers
-        # to one output dir are outside the sink's contract, as with
-        # Spark's own file sinks).
-        listed = {m["path"] for m in manifest}
-        for p in _glob.glob(os.path.join(self.path, "part-*.hfile")):
-            if p not in listed:
-                os.remove(p)
-        for p in _glob.glob(os.path.join(self.path, "part-*.hfile.tmp")):
-            try:  # straggler temp files from dead attempts
-                os.remove(p)
-            except OSError:
-                pass
-        with open(os.path.join(self.path, "_MANIFEST.json"), "w") as f:
-            json.dump(manifest, f)
-        with open(os.path.join(self.path, "_SUCCESS"), "w"):
-            pass
-
-    def abort(self, messages) -> None:
-        for msg in messages:
-            if msg is None:
-                continue
-            for m in msg.manifest:
-                try:
-                    os.remove(m["path"])
-                except OSError:
-                    pass
-
-
 class HFileDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -338,23 +258,6 @@ class HFileDataSource(DataSource):
 
     def reader(self, schema) -> HFileReader:
         return HFileReader(self.options)
-
-    def writer(self, schema, overwrite: bool) -> HFileSinkWriter:
-        path = self.options.get("path")
-        if overwrite:
-            import shutil
-
-            if path and os.path.exists(path):
-                shutil.rmtree(path)
-        elif path and os.path.exists(os.path.join(path, "_SUCCESS")):
-            # append semantics are NOT implemented (commit() would
-            # delist the prior write's files from _MANIFEST.json);
-            # reject instead of silently clobbering
-            raise ValueError(
-                "format('hfile') supports only mode('overwrite') onto an "
-                "existing table staging dir; append would delist prior files"
-            )
-        return HFileSinkWriter(self.options, schema)
 
 
 def register(spark) -> None:

@@ -44,6 +44,8 @@ import struct
 import zlib
 from collections.abc import Iterable, Iterator
 
+from hbase_bulkload_spark.sources.split_planning import list_files, scan_byte_splits
+
 MAGIC = b"RCF\x01"  # magic + CURRENT_VERSION
 SYNC_ESCAPE = b"\xff\xff\xff\xff"  # int -1: "a sync marker follows"
 COLUMN_COUNT_KEY = "hive.io.rcfile.column.number"
@@ -377,9 +379,6 @@ def iter_rcfile_range(
             i = j if j < len(buf) else -1
 
 
-DEFAULT_SPLIT_SIZE = 128 << 20
-
-
 def scan_splits(
     spark,
     path: str,
@@ -387,61 +386,33 @@ def scan_splits(
     split_size: int | None = None,
     columns: list[str] | None = None,
 ):
-    """The RCFile scan operator (op 4, `BulkImporterFromRC.java:94-95`):
-    byte-range splits planned from per-file headers, Arrow-batched
-    ``mapInPandas`` row-group decode. ``columns`` prunes decode to a
-    projection — skipped columns are never decompressed (the columnar
-    property; Hive reads `hive.io.file.readcolumn.ids` the same way).
-    All string-typed, matching `BytesRefArrayWritable` byte-slice
-    semantics (`BulkImporterFromRC.java:45,61-63`)."""
-    import glob as _glob
-
-    import pandas as pd
-
-    files = sorted(_glob.glob(os.path.join(path, "*.rc")))
-    if not files:
-        raise FileNotFoundError(f"no .rc files under {path}")
-
+    """The RCFile scan operator (op 4, `BulkImporterFromRC.java:94-95`)
+    and the one RCFile read path: byte-range splits planned from
+    per-file headers, Arrow-batched ``mapInPandas`` row-group decode
+    (`sources.split_planning.scan_byte_splits`; this module supplies
+    the header reader and row-group decoder). Every file must hold
+    ``len(names)`` columns. ``columns`` prunes decode to a projection —
+    skipped columns are never decompressed (the columnar property; Hive
+    reads `hive.io.file.readcolumn.ids` the same way). All
+    string-typed, matching `BytesRefArrayWritable` byte-slice semantics
+    (`BulkImporterFromRC.java:45,61-63`)."""
     out_names = names if columns is None else [c for c in names if c in columns]
     proj = None if columns is None else [names.index(c) for c in out_names]
 
-    headers = [(p, header_info(p)) for p in files]
-    if split_size is None:
-        from hbase_bulkload_spark.sources.split_planning import adaptive_split_size
-
-        total = sum(h[4] - h[3] for _, h in headers)
-        split_size = adaptive_split_size(
-            total, spark.sparkContext.defaultParallelism
-        )
-    plan = []
-    for p, (n_cols, codec, sync, data_start, fsize) in headers:
+    headers = []
+    for p in list_files(path, ".rc"):
+        n_cols, codec, sync, data_start, fsize = header_info(p)
         if n_cols != len(names):
             raise ValueError(f"{p}: {n_cols} columns, {len(names)} names")
-        b = data_start
-        while b < fsize:
-            e = min(b + split_size, fsize)
-            plan.append((p, b, e, data_start, sync.hex(), codec or ""))
-            b = e
+        headers.append((p, sync, data_start, fsize, codec))
 
-    sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(plan, len(plan)),
-        "path string, start long, end long, data_start long, sync string, codec string",
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                rows = list(
-                    iter_rcfile_range(
-                        r.path, r.start, r.end, r.data_start,
-                        bytes.fromhex(r.sync), len(names), r.codec or None,
-                        proj,
-                    )
-                )
-                yield pd.DataFrame(rows, columns=out_names, dtype=object)
+    def decode(p, start, end, data_start, sync, codec):
+        return iter_rcfile_range(
+            p, start, end, data_start, sync, len(names), codec, proj
+        )
 
     out_schema = ", ".join(f"{n} string" for n in out_names)
-    return sdf.mapInPandas(decode, out_schema)
+    return scan_byte_splits(spark, headers, decode, out_names, out_schema, split_size)
 
 
 def write_partitioned(

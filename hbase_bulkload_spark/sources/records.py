@@ -194,8 +194,10 @@ def scan_columnar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def scan_rcfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op 4 (true format): RCFile row-group scan via the pure-Python
-    layout codec (sources.rcfile.scan_splits) — byte-range splits,
-    per-column decompression, decode-time column pruning. The ORC scan
+    layout codec (sources.rcfile.scan_splits, the one RCFile read path;
+    kept over a Python DataSource form that read twice as slowly, see
+    sources.split_planning) — byte-range splits, per-column
+    decompression, decode-time column pruning. The ORC scan
     (`scan_columnar`) remains the *native columnar* analog; this one
     reads the reference's actual wire format."""
     from hbase_bulkload_spark.sources import rcfile
@@ -206,11 +208,12 @@ def scan_rcfile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Op 5: Avro record scan (`AvroKeyInputFormat<PWData>`,
     BulkImporterFromAvro.java:91). No spark-avro jar ships here, so the
-    scan is the sync-marker SPLIT reader (sources.avro_ocf.scan_splits):
-    byte-range splits planned from per-file headers, Arrow-batched
-    ``mapInPandas`` block decode — intra-file parallel, schema-generic
-    like the reference's `schema.getFields()` walk
-    (BulkImporterFromAvro.java:55-57)."""
+    scan is the sync-marker SPLIT reader (sources.avro_ocf.scan_splits,
+    the one Avro read path; kept over a Python DataSource form that
+    took 1.6x as long, see sources.split_planning): byte-range splits
+    planned from per-file headers, Arrow-batched ``mapInPandas`` block
+    decode — intra-file parallel, schema-generic like the reference's
+    `schema.getFields()` walk (BulkImporterFromAvro.java:55-57)."""
     from hbase_bulkload_spark.sources import avro_ocf
 
     return avro_ocf.scan_splits(spark, avro_path(spark, sf_dir))

@@ -214,7 +214,7 @@ def test_cli_fidelity_hfile_sink_binary_scan(spark, tmp_path):
     reference bytes."""
     import hashlib
 
-    from hbase_bulkload_spark.operators.hfile_load import scan_hfiles
+    from hbase_bulkload_spark.sources.hfile_datasource import register
 
     src = str(tmp_path / "fidh_src")
     os.makedirs(src)
@@ -226,7 +226,8 @@ def test_cli_fidelity_hfile_sink_binary_scan(spark, tmp_path):
         spark, src, out, fmt="csv", n_columns=5, n_buckets=16,
         raw_binary_keys=True, positional_qualifiers=True, sink="hfile",
     )
-    got = scan_hfiles(spark, out, binary=True).collect()
+    register(spark)
+    got = spark.read.format("hfile").option("binary", "true").load(out).collect()
     assert len(got) == 10  # 2 rows x 5 cells
     want_keys = {
         b"".join(

@@ -451,8 +451,14 @@ def test_spark_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_scan_range_pushdown(spark, tmp_path, monkeypatch):
-    """Scan(startRow, stopRow): correct [start, stop) results AND block
-    pruning — the planned block set must shrink versus a full scan."""
+    """Scan(startRow, stopRow) as rowkey filters on format("hfile"):
+    correct [start, stop) results AND block pruning — the planned block
+    set must shrink versus a full scan. A range that prunes every file
+    reads no split and returns an empty frame with the full schema."""
+    from pyspark.sql import functions as F
+
+    from hbase_bulkload_spark.sources.hfile_datasource import register
+
     staging = str(tmp_path / "staging")
     os.makedirs(staging)
     p = os.path.join(staging, "a.hfile")
@@ -464,34 +470,41 @@ def test_scan_range_pushdown(spark, tmp_path, monkeypatch):
     )
     hl.do_bulk_load([p], str(tmp_path / "t"), [b""])
 
-    # count planned blocks by shrinking split_bytes to one block per task
-    full = hl.scan_hfiles(spark, str(tmp_path / "t"), split_bytes=1)
-    ranged = hl.scan_hfiles(
-        spark,
-        str(tmp_path / "t"),
-        split_bytes=1,
-        start_row=b"0500",
-        stop_row=b"0520",
-    )
+    register(spark)
+
+    def scan():
+        # count planned blocks by shrinking split_bytes to one block per
+        # task; one load() per query (see sources.hfile_datasource on
+        # Spark caching a load's planned splits)
+        return spark.read.format("hfile").option("split_bytes", 1).load(
+            str(tmp_path / "t")
+        )
+
+    rk = F.col("rowkey")
+    full = scan()
+    ranged = scan().filter((rk >= "0500") & (rk < "0520"))
     got = sorted(r.rowkey for r in ranged.collect())
     assert got == [f"{i:04d}" for i in range(500, 520)]
     assert ranged.rdd.getNumPartitions() < full.rdd.getNumPartitions() / 10
-    # fully-pruned range: empty frame, same schema, no tasks
-    none = hl.scan_hfiles(spark, str(tmp_path / "t"), start_row=b"zzzz")
+    # fully-pruned range: empty frame, same schema
+    none = scan().filter(rk >= "zzzz")
     assert none.count() == 0
+    assert none.collect() == []
     assert none.schema == full.schema
 
 
 def test_cli_hfile_sink(spark, tmp_path):
     """--sink hfile end-to-end: CSV in, loaded 16-region table out."""
     from hbase_bulkload_spark import cli
+    from hbase_bulkload_spark.sources.hfile_datasource import register
 
     src = tmp_path / "in.csv"
     rows = [",".join(str(i * 10 + j) for j in range(9)) for i in range(200)]
     src.write_text("\n".join(rows) + "\n")
     out = str(tmp_path / "table")
     cli.ingest(spark, str(src), out, fmt="csv", sink="hfile")
-    scanned = hl.scan_hfiles(spark, out)
+    register(spark)
+    scanned = spark.read.format("hfile").load(out)
     cells = scanned.collect()
     assert len(cells) == 200 * 9
     assert {r.rowkey[:1] for r in cells} <= set("0123456789abcdef")

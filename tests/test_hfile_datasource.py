@@ -1,9 +1,12 @@
-"""format('hfile') Python DataSource: same cells as the operator-path
-scan, task count = planned block splits, and rowkey predicates prune
-files/blocks at planning time while Spark re-applies them for
-correctness (filters are never claimed)."""
+"""format('hfile') Python DataSource: same cells as the in-process
+decoder (`sources.hfile.iter_hfile`), task count = planned block
+splits, and rowkey predicates prune files/blocks at planning time while
+Spark re-applies them for correctness (filters are never claimed)."""
 
 from __future__ import annotations
+
+import glob
+import os
 
 import pytest
 
@@ -31,12 +34,17 @@ def table_dir(spark, sf_dir, tmp_path_factory):
     return str(base / "table")
 
 
+def _scan(spark, table_dir):
+    register(spark)
+    return spark.read.format("hfile").load(table_dir)
+
+
 def test_multi_get_matches_scan(spark, table_dir):
     """Distributed multi-get (Table.get(List<Get>)): for a sampled
     keyset, the fetched cells must equal the full scan filtered to
     those keys; absent keys return nothing; the keyset-DataFrame form
     behaves as a keyed lookup join."""
-    full = hl.scan_hfiles(spark, table_dir).collect()
+    full = _scan(spark, table_dir).collect()
     all_keys = sorted({r.rowkey for r in full})
     want_keys = all_keys[::97][:25]  # spread across regions
     got = hl.multi_get(spark, table_dir, want_keys).collect()
@@ -58,7 +66,7 @@ def test_multi_get_matches_scan(spark, table_dir):
 def test_multi_get_binary_mode(spark, table_dir):
     """binary=True returns raw bytes for every cell column, value-equal
     to the string mode's encodings (canonical hex keys are UTF-8)."""
-    full = hl.scan_hfiles(spark, table_dir).collect()
+    full = _scan(spark, table_dir).collect()
     keys = sorted({r.rowkey for r in full})[:5]
     s_rows = hl.multi_get(spark, table_dir, keys).collect()
     b_rows = hl.multi_get(spark, table_dir, keys, binary=True).collect()
@@ -139,12 +147,20 @@ def test_value_index_seek(spark, sf_dir, table_dir, tmp_path):
 
 
 def test_datasource_matches_operator_scan(spark, table_dir):
-    register(spark)
-    ds = spark.read.format("hfile").load(table_dir)
-    op = hl.scan_hfiles(spark, table_dir)
-    cols = ["region", "rowkey", "family", "qualifier", "value"]
-    got = sorted(map(tuple, ds.select(*cols).collect()))
-    want = sorted(map(tuple, op.select(*cols).collect()))
+    """The distributed scan returns exactly the cells the in-process
+    decoder reads from each placed file, tagged with the file's region."""
+    from hbase_bulkload_spark.sources import hfile as hf
+
+    cols = ["region", "rowkey", "family", "qualifier", "ts", "value"]
+    got = sorted(map(tuple, _scan(spark, table_dir).select(*cols).collect()))
+    want = sorted(
+        (
+            os.path.basename(os.path.dirname(os.path.dirname(p))),
+            row.decode(), fam.decode(), qual.decode(), ts, value.decode(),
+        )
+        for p in glob.glob(os.path.join(table_dir, "region-*", "*", "*.hfile"))
+        for row, fam, qual, ts, value in hf.iter_hfile(p)
+    )
     assert got == want and len(got) > 0
 
 
@@ -212,62 +228,6 @@ def test_push_filters_tighten_bounds_without_claiming():
     r5 = HFileReader({"path": "/nonexistent"})
     list(r5.pushFilters([StringStartsWith(("rowkey",), "")]))
     assert r5.stop_row is None
-
-
-def test_datasource_writer_roundtrip(spark, sf_dir, tmp_path):
-    """df.write.format('hfile') must produce files that bulk-load and
-    scan back to exactly the KV frame, with a committed manifest; a
-    frame missing the KV contract columns is rejected."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from hbase_bulkload_spark.operators.bulkload import bulkload_pipeline
-    from hbase_bulkload_spark.sources import records
-
-    register(spark)
-    kv = bulkload_pipeline(
-        records.wide9(spark, sf_dir), records.RECORD_COLS[:4], records.RECORD_COLS
-    )
-    out = str(tmp_path / "staging")
-    kv.write.format("hfile").mode("overwrite").save(out)
-    assert os.path.exists(os.path.join(out, "_SUCCESS"))
-    manifest = json.load(open(os.path.join(out, "_MANIFEST.json")))
-    assert manifest and all(os.path.exists(m["path"]) for m in manifest)
-    assert sum(m["entry_count"] for m in manifest) == kv.count()
-
-    boundaries = [format(i, "x").encode() for i in range(16)]
-    hl.do_bulk_load(
-        [m["path"] for m in manifest], str(tmp_path / "table"), boundaries,
-        spark=spark,
-    )
-    scanned = hl.scan_hfiles(spark, str(tmp_path / "table"))
-    cols = ["rowkey", "family", "qualifier", "value"]
-    got = sorted(map(tuple, scanned.select(*cols).collect()))
-    want = sorted(map(tuple, kv.select(*cols).collect()))
-    assert got == want
-
-    with pytest.raises(Exception, match="missing"):
-        kv.select("rowkey", "value").write.format("hfile").mode(
-            "overwrite"
-        ).save(str(tmp_path / "bad"))
-
-
-def test_datasource_writer_rejects_append(spark, sf_dir, tmp_path):
-    from hbase_bulkload_spark.operators.bulkload import bulkload_pipeline
-    from hbase_bulkload_spark.sources import records
-
-    register(spark)
-    kv = bulkload_pipeline(
-        records.wide9(spark, sf_dir), records.RECORD_COLS[:4], records.RECORD_COLS
-    ).limit(50)
-    out = str(tmp_path / "staging")
-    kv.write.format("hfile").mode("overwrite").save(out)
-    with pytest.raises(Exception, match="overwrite"):
-        kv.write.format("hfile").mode("append").save(out)
-    # overwrite replaces cleanly
-    kv.write.format("hfile").mode("overwrite").save(out)
 
 
 def test_datasource_binary_read_mode(spark, table_dir):

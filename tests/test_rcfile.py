@@ -156,6 +156,16 @@ def test_scan_splits_column_pruning(spark, tmp_path):
     assert {r["c2"] for r in df.collect()} == {None, "yy", "z", "end"}
 
 
+def test_rcfile_name_count_mismatch_rejected(spark, sf_dir):
+    """RCFile stores only a column count: names that do not match it
+    are rejected at planning time, before any task runs."""
+    from hbase_bulkload_spark.sources import records
+
+    path = records.rcfile_path(spark, sf_dir)
+    with pytest.raises(ValueError, match="names"):
+        rcfile.scan_splits(spark, path, ["a", "b"])
+
+
 try:
     from hypothesis import given, settings
     from hypothesis import strategies as st

@@ -15,6 +15,14 @@ from hbase_bulkload_spark.datasets import table
 from hbase_bulkload_spark.streaming import stream_ops
 
 
+def _hfile_table(spark, table_dir: str):
+    """The loaded HFile table's cells, read through format("hfile")."""
+    from hbase_bulkload_spark.sources.hfile_datasource import register
+
+    register(spark)
+    return spark.read.format("hfile").load(table_dir)
+
+
 def _stream_events(spark, sf_dir, tmp_path):
     batch = table(spark, sf_dir, "events")
     src = str(tmp_path / "events_src")
@@ -238,7 +246,7 @@ def test_stream_bulkload_hfile_sink(spark, sf_dir, tmp_path):
     want = bulkload_kv(wide, RECORD_COLS[:4], RECORD_COLS).select(
         "rowkey", "qualifier", "value"
     )
-    got = hfile_load.scan_hfiles(spark, table).select(
+    got = _hfile_table(spark, table).select(
         "rowkey", "qualifier", "value"
     )
     assert got.count() == want.count()
@@ -259,7 +267,7 @@ def test_stream_bulkload_hfile_sink(spark, sf_dir, tmp_path):
         for d in glob.glob(os.path.join(table, "region-*"))
     ]
     assert max(per_region) == 1
-    again = hfile_load.scan_hfiles(spark, table).select(
+    again = _hfile_table(spark, table).select(
         "rowkey", "qualifier", "value"
     )
     assert again.count() == want.count()
@@ -301,7 +309,7 @@ def test_stream_bulkload_hfile_sink_sf01(spark, tmp_path):
     q = stream_ops.start_bulkload_hfile_sink(cells, table, str(tmp_path / "ckpt_h"))
     q.awaitTermination(600)
 
-    got = hfile_load.scan_hfiles(spark, table).count()
+    got = _hfile_table(spark, table).count()
     assert got == want_cells, (got, want_cells)
 
     manifests = hfile_load.compact_table(table)
@@ -311,7 +319,7 @@ def test_stream_bulkload_hfile_sink_sf01(spark, tmp_path):
         for d in glob.glob(os.path.join(table, "region-*"))
     ]
     assert per_region and max(per_region) == 1
-    assert hfile_load.scan_hfiles(spark, table).count() == want_cells
+    assert _hfile_table(spark, table).count() == want_cells
 
 
 def test_session_gap_boundary(spark):

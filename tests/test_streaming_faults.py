@@ -29,6 +29,14 @@ import pytest
 from hbase_bulkload_spark.streaming import stream_ops
 
 
+def _hfile_table(spark, table_dir: str):
+    """The loaded HFile table's cells, read through format("hfile")."""
+    from hbase_bulkload_spark.sources.hfile_datasource import register
+
+    register(spark)
+    return spark.read.format("hfile").load(table_dir)
+
+
 def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
@@ -164,7 +172,6 @@ def test_bulkload_hfile_sink_survives_crash(spark, sf_dir, tmp_path, point):
     holding its files). Batch-stamped file names + rename placement must
     make the restarted run converge to exactly the clean-run content —
     no duplicated or lost cells."""
-    from hbase_bulkload_spark.operators import hfile_load
     from hbase_bulkload_spark.operators.bulkload import bulkload_kv
     from hbase_bulkload_spark.sources import records
     from hbase_bulkload_spark.sources.records import RECORD_COLS
@@ -208,7 +215,7 @@ def test_bulkload_hfile_sink_survives_crash(spark, sf_dir, tmp_path, point):
     want = bulkload_kv(wide, RECORD_COLS[:4], RECORD_COLS).select(
         "rowkey", "qualifier", "value"
     )
-    got = hfile_load.scan_hfiles(spark, table).select(
+    got = _hfile_table(spark, table).select(
         "rowkey", "qualifier", "value"
     )
     assert got.count() == want.count()
