@@ -1,23 +1,42 @@
-"""``pyspark.daemon`` wrapper that warms the scientific stack before
-serving worker forks.
+"""``pyspark.daemon`` wrapper that takes three per-worker costs off
+every Python task: imports, zip directory re-reads and the per-task gc
+walk.
 
-The stock daemon imports only pyspark; numpy/pandas/pyarrow are first
-imported inside each forked worker when a Pandas UDF deserializes —
-~0.5-1 s of import work per fresh worker, paid on every worker
-cold-start. Importing them HERE, in the daemon, once, puts the modules
-in the daemon's image, so every forked worker inherits them via
-copy-on-write pages: a fresh worker is task-ready in milliseconds.
+Every Python stage of the engine (RCFile decode, the HFile writer, the
+boundary-split tasks of ``do_bulk_load``, the ``format("hfile")`` scan,
+``multi_get``) runs in a worker forked from this daemon. Measured on a
+4-core VM (CPython 3.11, Spark 4.1.2), the stock daemon made a reused
+worker spend more on fixed cost than most tasks spend on rows:
 
-This matters twice:
+- **Imports.** The stock daemon imports only pyspark; numpy, pandas and
+  pyarrow are first imported inside each forked worker when a Pandas
+  UDF deserializes — ~0.5-1 s per fresh worker. They are imported here,
+  once, so every fork inherits them via copy-on-write pages.
+- **Zip directory re-reads.** ``pyspark.worker_util.setup_spark_files``
+  calls ``importlib.invalidate_caches()`` on every task. On CPython
+  3.10/3.11 ``zipimporter.invalidate_caches`` eagerly re-parses the
+  archive's whole central directory, and a worker holds 16
+  zipimporters: 12 over ``pyspark.zip`` (one per imported subpackage;
+  1 328 entries, 5-10 ms a read), 2 over the spark-core jar Spark puts
+  on the worker ``PYTHONPATH`` (5 359 entries, 23-43 ms a read) and 2
+  over py4j's zip. That was 110-210 ms of single-threaded Python
+  before a task read its first row.
+  :func:`install_zip_invalidation_guard` makes the re-read happen only
+  when the archive's ``(st_ino, st_size, st_mtime_ns)`` changed since
+  that importer last read it. CPython 3.12 made the re-read lazy
+  upstream (gh-103200), so the guard is installed only below 3.12.
+- **Per-task gc walk.** ``pyspark.daemon`` runs ``gc.collect()`` after
+  every task of a reused worker; it walked the whole pre-imported
+  numpy/pandas/pyarrow heap, 20-45 ms a task. ``gc.freeze()`` after the
+  warm imports moves that heap (~73k objects) to the permanent
+  generation, so the per-task collection skips it (0.1-1.4 ms) and,
+  the usual pre-fork idiom, no longer writes to those pages, so they
+  stay shared.
 
-- **bench protocol**: the harness drains the idle-worker pool between
-  timed queries (``bench._recycle_python_workers``, the round-8 fix for
-  cross-query worker-pool memory-reclaim noise) — without preload, each
-  Python-stage query would pay 32 re-imports inside its timed window,
-  trading one measurement artifact for another;
-- **production**: executors that scale worker counts up and down (or
-  kill workers via ``spark.python.worker.killOnIdleTimeout``) get
-  millisecond worker cold-starts instead of the import storm.
+Together: a 1-row ``spark.range(1).mapInArrow(...)`` job went 0.35 s →
+0.16 s (median of 12), ``multi_get`` (four 64-key batches) 0.62 s →
+0.23 s, and the bench's ``rcfile_load_read`` doubled its cells per
+second.
 
 Wired in by ``session.get_spark`` via ``spark.python.daemon.module``
 (the module must be importable by the worker-side Python — get_spark
@@ -26,6 +45,11 @@ availability is probed driver-side first; if the stack is absent the
 stock daemon is kept, so this never turns an optional dependency into
 a hard one.
 """
+
+import gc
+import os
+import sys
+import zipimport
 
 # fork-inherited warm imports — order cheap-to-heavy so a partial
 # failure (unlikely: the driver probed these) leaves the most useful
@@ -36,5 +60,46 @@ import pyarrow  # noqa: F401
 
 from pyspark.daemon import manager
 
+_stock_invalidate_caches = getattr(zipimport.zipimporter, "invalidate_caches", None)
+
+
+def stat_guarded_invalidate_caches(self: zipimport.zipimporter) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's
+    directory only when its ``(st_ino, st_size, st_mtime_ns)`` changed
+    since THIS importer last read it. The signature is kept per
+    importer, not per archive: several importers share one archive, and
+    each must re-read it once after a change. The stat is taken before
+    the read, so a change racing the read is seen again on the next
+    call."""
+    try:
+        st = os.stat(self.archive)
+    except OSError:
+        _stock_invalidate_caches(self)
+        return
+    signature = (st.st_ino, st.st_size, st.st_mtime_ns)
+    if getattr(self, "_stat_signature", None) == signature:
+        return
+    _stock_invalidate_caches(self)
+    self._stat_signature = signature
+
+
+def install_zip_invalidation_guard() -> bool:
+    """Replace ``zipimporter.invalidate_caches`` with
+    :func:`stat_guarded_invalidate_caches` where the stock method re-reads
+    eagerly (CPython < 3.12). Returns whether it was installed."""
+    if sys.version_info >= (3, 12) or _stock_invalidate_caches is None:
+        return False
+    zipimport.zipimporter.invalidate_caches = stat_guarded_invalidate_caches
+    return True
+
+
 if __name__ == "__main__":
+    # install the package module's guard, not this ``__main__`` copy's,
+    # so the guard a worker sees is importable by name
+    from hbase_bulkload_spark import daemon_preload
+
+    daemon_preload.install_zip_invalidation_guard()
+    # after the warm imports: each worker's per-task gc.collect() then
+    # skips the inherited heap
+    gc.freeze()
     manager()

@@ -655,20 +655,25 @@ def _lsh_pack_gate(sf_dir: str) -> bool:
     ids exceed the bound; the result set is identical either way, the
     packed plan just halves the candidate-dedup shuffle key."""
     import os
+    import warnings
 
     # A/B override for interleaved scale measurements (and an escape
     # hatch): SPARK_GRAFT_LSH_PACK=0 forces the unpacked plan, =1
-    # forces packed (caller asserts the id bound), unset → footer gate.
-    forced = os.environ.get("SPARK_GRAFT_LSH_PACK")
-    if forced is not None and forced != "":
-        return forced not in ("0", "false", "no")
+    # forces packed when footer stats are missing — but never past
+    # stats that show an id outside u32, where packing would corrupt
+    # the pair ids.
+    forced = os.environ.get("SPARK_GRAFT_LSH_PACK") or None
+    if forced in ("0", "false", "no"):
+        return False
     mm = datasets.parquet_column_minmax(sf_dir, "embeddings", "vec_id")
+    if mm is None and forced is not None:
+        return True
     if mm is not None and 0 <= mm[0] and mm[1] < (1 << 32):
         return True
-    import warnings
-
     warnings.warn(
-        "LSH pair packing disabled: embeddings.vec_id "
+        "LSH pair packing disabled"
+        + (" despite SPARK_GRAFT_LSH_PACK" if forced is not None else "")
+        + ": embeddings.vec_id "
         + ("has no footer min/max stats" if mm is None else f"spans {mm}")
         + " — candidate dedup shuffles two longs per pair instead of one",
         RuntimeWarning,

@@ -23,10 +23,21 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def _daemon_preload_conf() -> dict[str, str]:
-    """``spark.python.daemon.module`` → the warm-import daemon
-    (:mod:`hbase_bulkload_spark.daemon_preload`): worker forks inherit
-    numpy/pandas/pyarrow copy-on-write instead of re-importing them on
-    every cold start (~0.5-1 s per worker, per fork storm).
+    """``spark.python.daemon.module`` → the engine's worker daemon
+    (:mod:`hbase_bulkload_spark.daemon_preload`), which takes three
+    per-worker costs off every Python task (4-core VM, CPython 3.11):
+
+    - imports: forks inherit numpy/pandas/pyarrow copy-on-write instead
+      of re-importing them on every cold start (~0.5-1 s per worker);
+    - zip re-reads: the per-task ``importlib.invalidate_caches()`` no
+      longer re-parses pyspark.zip and the spark-core jar for each of a
+      worker's 16 zipimporters unless the archive changed (110-210 ms
+      a task);
+    - the per-task gc walk: the warm heap is frozen before forking, so
+      a reused worker's ``gc.collect()`` after each task skips it
+      (20-45 ms a task).
+
+    A 1-row ``mapInArrow`` job went 0.35 s → 0.16 s with all three.
 
     Two preconditions, both probed here so a broken environment
     degrades to the stock daemon instead of killing every Python task:

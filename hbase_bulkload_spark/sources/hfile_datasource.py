@@ -31,7 +31,9 @@ the relation a `load()` returns: a query with filters re-runs
 `pushFilters` and replaces the cache, but a query without filters
 reuses it. So after `df.filter(<rowkey range>).count()`, a plain
 `df.count()` counts only that range. Every caller in this package
-loads afresh per query.
+loads afresh per query. `tests/test_hfile.py::
+test_reused_frame_reuses_pushed_range` pins this, so a Spark upgrade
+that changes it fails there.
 
 Registration is per-session and explicit:
 

@@ -158,14 +158,9 @@ def test_lsh_pair_packing_parity_and_gate(spark, sf_dir):
     assert _lsh_pack_gate(sf_dir) is True
 
 
-def test_lsh_pack_gate_refuses_huge_ids(tmp_path):
-    """Ids at/past 2^32 must fall back to the unpacked plan, loudly."""
-    import warnings
-
+def _write_huge_id_embeddings(path, stats: bool = True) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from hbase_bulkload_spark.queries.extensions import _lsh_pack_gate
 
     t = pa.table(
         {
@@ -174,11 +169,38 @@ def test_lsh_pack_gate_refuses_huge_ids(tmp_path):
             "label": pa.array(["a", "b"]),
         }
     )
-    pq.write_table(t, str(tmp_path / "embeddings.parquet"))
+    pq.write_table(t, str(path / "embeddings.parquet"), write_statistics=stats)
+
+
+def test_lsh_pack_gate_refuses_huge_ids(tmp_path):
+    """Ids at/past 2^32 must fall back to the unpacked plan, loudly."""
+    import warnings
+
+    from hbase_bulkload_spark.queries.extensions import _lsh_pack_gate
+
+    _write_huge_id_embeddings(tmp_path)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         assert _lsh_pack_gate(str(tmp_path)) is False
     assert any("pair packing disabled" in str(x.message) for x in w)
+
+
+def test_lsh_pack_gate_forced_still_checks_id_bound(tmp_path, monkeypatch):
+    """SPARK_GRAFT_LSH_PACK=1 forces packing only where footer stats
+    cannot disprove the u32 bound: stats showing an id >= 2^32 still
+    refuse, with a RuntimeWarning."""
+    from hbase_bulkload_spark.queries.extensions import _lsh_pack_gate
+
+    _write_huge_id_embeddings(tmp_path)
+    monkeypatch.setenv("SPARK_GRAFT_LSH_PACK", "1")
+    with pytest.warns(RuntimeWarning, match="despite SPARK_GRAFT_LSH_PACK"):
+        assert _lsh_pack_gate(str(tmp_path)) is False
+
+    # no stats: nothing to check against, the caller's assertion holds
+    nostats = tmp_path / "nostats"
+    nostats.mkdir()
+    _write_huge_id_embeddings(nostats, stats=False)
+    assert _lsh_pack_gate(str(nostats)) is True
 
 
 def test_ivf_topk_precision_and_recall(spark, sf_dir):

@@ -450,13 +450,10 @@ def test_spark_roundtrip(spark, sf_dir, tmp_path):
     assert bad == 0
 
 
-def test_scan_range_pushdown(spark, tmp_path, monkeypatch):
-    """Scan(startRow, stopRow) as rowkey filters on format("hfile"):
-    correct [start, stop) results AND block pruning — the planned block
-    set must shrink versus a full scan. A range that prunes every file
-    reads no split and returns an empty frame with the full schema."""
-    from pyspark.sql import functions as F
-
+def _small_block_table(spark, tmp_path) -> str:
+    """A one-region table of 2000 cells, rowkeys "0000".."1999", in
+    ~1 KB blocks (many blocks, so pruning is observable); registers
+    ``format("hfile")``."""
     from hbase_bulkload_spark.sources.hfile_datasource import register
 
     staging = str(tmp_path / "staging")
@@ -466,19 +463,27 @@ def test_scan_range_pushdown(spark, tmp_path, monkeypatch):
         p,
         [(f"{i:04d}".encode(), b"c", b"q", 0, b"v%d" % i) for i in range(2000)],
         compression=None,
-        block_size=1024,  # many small blocks so pruning is observable
+        block_size=1024,
     )
     hl.do_bulk_load([p], str(tmp_path / "t"), [b""])
-
     register(spark)
+    return str(tmp_path / "t")
+
+
+def test_scan_range_pushdown(spark, tmp_path, monkeypatch):
+    """Scan(startRow, stopRow) as rowkey filters on format("hfile"):
+    correct [start, stop) results AND block pruning — the planned block
+    set must shrink versus a full scan. A range that prunes every file
+    reads no split and returns an empty frame with the full schema."""
+    from pyspark.sql import functions as F
+
+    table = _small_block_table(spark, tmp_path)
 
     def scan():
         # count planned blocks by shrinking split_bytes to one block per
         # task; one load() per query (see sources.hfile_datasource on
         # Spark caching a load's planned splits)
-        return spark.read.format("hfile").option("split_bytes", 1).load(
-            str(tmp_path / "t")
-        )
+        return spark.read.format("hfile").option("split_bytes", 1).load(table)
 
     rk = F.col("rowkey")
     full = scan()
@@ -491,6 +496,30 @@ def test_scan_range_pushdown(spark, tmp_path, monkeypatch):
     assert none.count() == 0
     assert none.collect() == []
     assert none.schema == full.schema
+
+
+def test_reused_frame_reuses_pushed_range(spark, tmp_path):
+    """Pins a Spark 4.1 behaviour the package works around: the relation
+    a ``format("hfile")`` ``load()`` returns caches its planned splits,
+    and a query with no pushable filter reuses them. So a plain
+    ``count()`` on a frame that was first counted under a rowkey range
+    counts only that range; a fresh ``load()`` counts everything. If a
+    Spark upgrade changes this, this test fails: update the "Call
+    ``load()`` once per query" paragraph of ``sources.hfile_datasource``
+    (and this test) to match."""
+    from pyspark.sql import functions as F
+
+    table = _small_block_table(spark, tmp_path)
+
+    def load():
+        return spark.read.format("hfile").load(table)
+
+    rk = F.col("rowkey")
+    df = load()
+    ranged = df.filter((rk >= "0500") & (rk < "0520")).count()
+    assert ranged == 20
+    assert 20 <= df.count() < 2000  # the cached, range-pruned splits
+    assert load().count() == 2000
 
 
 def test_cli_hfile_sink(spark, tmp_path):

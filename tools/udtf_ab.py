@@ -11,19 +11,21 @@ alternative, and the number is committed either way.
     python tools/udtf_ab.py [sf_dir] [n_runs]
 
 Prints one JSON line: min/median seconds per variant over n_runs
-noop-sink executions, plus a row-count cross-check (the two variants
-must emit identical row counts; full value parity is the oracle's job —
+noop-sink executions, plus the row counts. The two variants must emit
+identical row counts, checked before any timing: on a mismatch it exits
+non-zero and times nothing (full value parity is the oracle's job —
 q_udtf_cells is hash-checked against DuckDB).
 """
 
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hbase_bulkload_spark.session import get_spark
 from hbase_bulkload_spark.sources import records
@@ -81,6 +83,8 @@ def main() -> None:
         "map_in_arrow": lambda: _map_in_arrow_form(spark, sf_dir),
     }
     counts = {k: fn().count() for k, fn in variants.items()}
+    if counts["udtf"] != counts["map_in_arrow"]:
+        sys.exit(f"udtf_ab: row counts differ, nothing timed: {counts}")
     out: dict[str, dict] = {"rows": counts, "sf_dir": sf_dir}
     for name, fn in variants.items():
         times = []
