@@ -184,6 +184,12 @@ _FP_COLLECT_METRICS_ID = re.compile(r"^(\s*(?:[+:|-]\s*)*CollectMetrics .*), \d+
 #: Partition COUNT never changes what a query computes, so the
 #: fingerprint normalizes it out; plan SHAPE (the Repartition node
 #:  itself, its keys) still fingerprints.
+#: Accepted blind spot: the normalization cannot tell an
+#: environment-derived count from a hard-coded one, so a deliberate
+#: count change in code (say repartition(8) → repartition(512)), which
+#: can change a query's cost, keeps the fingerprint and does NOT
+#: invalidate that key's committed good-window minima. Whoever makes
+#: such a change has to drop the key's minima by hand.
 _FP_REPARTITION_N = re.compile(
     r"^(\s*(?:[+:|-]\s*)*)Repartition \d+,", re.M
 )

@@ -17,4 +17,23 @@ built-ins genuinely cannot express the semantics (Arrow-batched).
 
 __version__ = "0.1.0"
 
-from hbase_bulkload_spark.session import get_spark  # noqa: F401
+import warnings
+
+from hbase_bulkload_spark import daemon_preload
+
+# every Python process that loads engine code gets the zip re-read
+# guard, including the DataSource planner workers Spark forks from its
+# stock daemon (they ignore spark.python.daemon.module)
+daemon_preload.install_zip_invalidation_guard()
+# `python -m hbase_bulkload_spark.daemon_preload` (the engine's worker
+# daemon) finds the module already imported by the line above and runpy
+# warns about the second, ``__main__`` copy. That copy only runs the
+# daemon and uses none of its own definitions, so the warning is noise
+# on every session's stderr.
+warnings.filterwarnings(
+    "ignore",
+    message=r"'hbase_bulkload_spark\.daemon_preload' found in sys\.modules",
+    category=RuntimeWarning,
+)
+
+from hbase_bulkload_spark.session import get_spark  # noqa: E402, F401

@@ -2,9 +2,19 @@
 every Python task: imports, zip directory re-reads and the per-task gc
 walk.
 
-Every Python stage of the engine (RCFile decode, the HFile writer, the
-boundary-split tasks of ``do_bulk_load``, the ``format("hfile")`` scan,
-``multi_get``) runs in a worker forked from this daemon. Measured on a
+Every Python task of the engine (RCFile decode, the HFile writer, the
+boundary-split tasks of ``do_bulk_load``, the ``format("hfile")``
+scan's ``read()``, ``multi_get``) runs in a worker forked from this
+daemon. The Python DataSource planner calls do not:
+``PythonPlannerRunner`` asks for its worker through the 4-argument
+``SparkEnv.createPythonWorker`` overload, which passes
+``PythonWorkerFactory.defaultDaemonModule`` and so ignores
+``spark.python.daemon.module``. Every ``format("hfile")`` query makes
+two such calls (``schema()``, then ``pushFilters()`` and
+``partitions()``), in reused workers of Spark's stock
+``pyspark.daemon``. Those workers get the zip guard below from the
+package instead: ``hbase_bulkload_spark/__init__.py`` installs it, and
+unpickling an engine DataSource imports the package. Measured on a
 4-core VM (CPython 3.11, Spark 4.1.2), the stock daemon made a reused
 worker spend more on fixed cost than most tasks spend on rows:
 
@@ -51,15 +61,6 @@ import os
 import sys
 import zipimport
 
-# fork-inherited warm imports — order cheap-to-heavy so a partial
-# failure (unlikely: the driver probed these) leaves the most useful
-# prefix warm
-import numpy  # noqa: F401
-import pandas  # noqa: F401
-import pyarrow  # noqa: F401
-
-from pyspark.daemon import manager
-
 _stock_invalidate_caches = getattr(zipimport.zipimporter, "invalidate_caches", None)
 
 
@@ -94,11 +95,18 @@ def install_zip_invalidation_guard() -> bool:
 
 
 if __name__ == "__main__":
-    # install the package module's guard, not this ``__main__`` copy's,
-    # so the guard a worker sees is importable by name
-    from hbase_bulkload_spark import daemon_preload
+    # ``python -m`` imports the package first, and the package installs
+    # the guard (its module's copy, not this ``__main__`` one's). Then
+    # the fork-inherited warm imports, kept here so that importing the
+    # module stays cheap — order cheap-to-heavy so a partial failure
+    # (unlikely: the driver probed these) leaves the most useful prefix
+    # warm
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
 
-    daemon_preload.install_zip_invalidation_guard()
+    from pyspark.daemon import manager
+
     # after the warm imports: each worker's per-task gc.collect() then
     # skips the inherited heap
     gc.freeze()

@@ -573,9 +573,11 @@ def multi_get(
     ``rowkeys`` is a list of canonical (string) keys or a DataFrame
     with a ``rowkey`` column — the DataFrame form makes this a keyed
     lookup JOIN against the HBase artifact: cells come back only for
-    requested keys, the table is never scanned. Output matches a
-    `format("hfile")` scan: (region, rowkey, family, qualifier, ts,
-    value)."""
+    requested keys, the table is never scanned. A key given more than
+    once is fetched once, so each cell comes back once: a list is
+    deduplicated on the driver (no shuffle), a DataFrame with
+    ``distinct()``. Output matches a `format("hfile")` scan: (region,
+    rowkey, family, qualifier, ts, value)."""
     import pandas as pd
 
     import glob as _glob
@@ -594,9 +596,11 @@ def multi_get(
     if isinstance(rowkeys, DataFrame):
         keys_df = rowkeys.select("rowkey").distinct()
     else:
+        # the keys are on the driver already: deduplicating here, not
+        # with distinct(), keeps the plan free of a shuffle
         keys_df = spark.createDataFrame(
-            [(k,) for k in rowkeys], "rowkey string"
-        ).distinct()
+            [(k,) for k in dict.fromkeys(rowkeys)], "rowkey string"
+        )
 
     cell_t = "binary" if binary else "string"
     out_schema = (

@@ -1,5 +1,6 @@
 """The worker daemon's per-task savings: the stat-guarded zipimport
-invalidation and the frozen warm heap."""
+invalidation and the frozen warm heap, and the guard in the
+DataSource planner workers Spark forks from its stock daemon."""
 
 from __future__ import annotations
 
@@ -38,8 +39,13 @@ def zip_on_path(tmp_path, monkeypatch):
             "guard_probe_pkg/a.py": "A = 1\n",
         },
     )
-    stock = zipimport.zipimporter.invalidate_caches
-    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", stock)
+    # importing the package installed the guard: restore the method it
+    # replaced, not the one in place now
+    monkeypatch.setattr(
+        zipimport.zipimporter,
+        "invalidate_caches",
+        daemon_preload._stock_invalidate_caches,
+    )
     monkeypatch.syspath_prepend(archive)
     yield archive
     for name in [m for m in sys.modules if m.startswith("guard_probe_")]:
@@ -138,3 +144,28 @@ def test_workers_run_under_the_preload_daemon(spark):
     if sys.version_info < (3, 12):
         assert row.guard == "hbase_bulkload_spark.daemon_preload"
     assert row.frozen > 0
+
+
+def test_datasource_planner_runs_with_the_guard(spark):
+    """The ``format(...)`` planner calls (``schema()``, pushdown and
+    ``partitions()``) run in workers of Spark's stock ``pyspark.daemon``,
+    which ignores ``spark.python.daemon.module``. Unpickling an engine
+    DataSource imports the package, which installs the guard there too.
+    A local subclass is pickled by value, so the base class is what
+    brings the package in."""
+    from hbase_bulkload_spark.sources.hfile_datasource import HFileDataSource
+
+    class GuardProbe(HFileDataSource):
+        @classmethod
+        def name(cls) -> str:
+            return "guard_probe"
+
+        def schema(self) -> str:
+            import zipimport
+
+            return f"`{zipimport.zipimporter.invalidate_caches.__module__}` string"
+
+    spark.dataSource.register(GuardProbe)
+    columns = spark.read.format("guard_probe").load("unused").columns
+    if sys.version_info < (3, 12):
+        assert columns == ["hbase_bulkload_spark.daemon_preload"]

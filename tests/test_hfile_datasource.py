@@ -63,6 +63,25 @@ def test_multi_get_matches_scan(spark, table_dir):
     assert hl.multi_get(spark, table_dir, kdf).count() == len(want)
 
 
+def test_multi_get_list_with_repeated_keys(spark, table_dir):
+    """A key list naming every key twice returns the cells of the
+    deduplicated list, each exactly once, and the list is deduplicated
+    on the driver: the executed plan has no Exchange."""
+    from hbase_bulkload_spark.plans.inspect import physical_plan
+
+    full = _scan(spark, table_dir).collect()
+    keys = sorted({r.rowkey for r in full})[::97][:25]
+    # the second copy runs backwards, so a key and its repeat sit in
+    # different partitions of the key list
+    df = hl.multi_get(spark, table_dir, keys + keys[::-1])
+    got = [tuple(r) for r in df.collect()]
+    want = [tuple(r) for r in hl.multi_get(spark, table_dir, keys).collect()]
+    assert len(got) > 0
+    assert len(set(got)) == len(got)
+    assert sorted(got) == sorted(want)
+    assert "Exchange" not in physical_plan(df)
+
+
 def test_multi_get_binary_mode(spark, table_dir):
     """binary=True returns raw bytes for every cell column, value-equal
     to the string mode's encodings (canonical hex keys are UTF-8)."""
